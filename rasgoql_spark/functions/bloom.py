@@ -29,6 +29,7 @@ No counterpart in the reference repo; cites the public algorithm only.
 
 from __future__ import annotations
 
+from ._artifact import check_fingerprint, load_artifact, save_artifact
 from ._cache import release_now, scoped_persist
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -127,17 +128,7 @@ def dedup_against_bloom(
                 "BloomIndex was built with different bits_log2/num_hashes "
                 "than this call"
             )
-        if reference is not None and index.n_docs is not None:
-            # integrity check tying the index to the corpus it claims to
-            # cover (same contract as dedup_against + MinHashIndex); omit
-            # reference on the index path to skip the count
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BloomIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_bloom_index or rebuild"
-                )
+        check_fingerprint(index, reference, "docs")
         bits, ref_fps = index.bits, index.fps
     else:
         ref_fps = None
@@ -186,7 +177,8 @@ class BloomIndex:
     work, measured dominant at 100:1 reference:batch ratios). Build both
     structures once; per-batch work is then the broadcast bit join plus a
     probe of the cached fingerprint table by bloom positives only.
-    ``release()`` unpersists both."""
+    ``release()`` unpersists both; save/load follow the artifact contract
+    in ``_artifact.py``."""
 
     def __init__(self, bits: DataFrame, fps: DataFrame, bits_log2: int,
                  num_hashes: int, n_docs: int | None = None, carry=()):
@@ -196,7 +188,7 @@ class BloomIndex:
         self.num_hashes = num_hashes
         # corpus fingerprint: reference row count at build time (counted
         # off the SAME cached scan the fps derive from, so it cannot drift
-        # from the indexed rows); None on pre-fingerprint artifacts
+        # from the indexed rows)
         self.n_docs = n_docs
         # frames inherited from a source index by update_bloom_index:
         # releasing the updated index frees the whole increment chain
@@ -274,31 +266,21 @@ def update_bloom_index(
 
 
 def save_bloom_index(index: BloomIndex, path: str) -> str:
-    """Persist a :class:`BloomIndex` as parquet (``{path}/bits``,
-    ``{path}/fps``) plus a one-row params table — the cross-JOB form of the
-    index: build on the corpus-refresh cadence, load per crawl batch."""
-    index.bits.write.mode("overwrite").parquet(f"{path}/bits")
-    index.fps.write.mode("overwrite").parquet(f"{path}/fps")
-    spark = index.bits.sparkSession
-    spark.createDataFrame(
-        [(index.bits_log2, index.num_hashes,
-          -1 if index.n_docs is None else int(index.n_docs))],
-        "bits_log2 int, num_hashes int, n_docs long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist a :class:`BloomIndex` (artifact contract: ``_artifact``) —
+    the cross-JOB form of the index: build on the corpus-refresh cadence,
+    load per crawl batch."""
+    return save_artifact(
+        path, "bloom", {"bits": index.bits, "fps": index.fps},
+        bits_log2=index.bits_log2, num_hashes=index.num_hashes,
+        n_docs=index.n_docs,
+    )
 
 
 def load_bloom_index(spark, path: str, persist: bool = True) -> BloomIndex:
     """Load a :func:`save_bloom_index` artifact. ``persist`` pins both
     frames for multi-batch reuse (call ``release()`` when done)."""
-    row = spark.read.parquet(f"{path}/params").first()
-    bits = spark.read.parquet(f"{path}/bits")
-    fps = spark.read.parquet(f"{path}/fps")
-    if persist:
-        bits = scoped_persist(bits)
-        fps = scoped_persist(fps)
-    nd = row["n_docs"] if "n_docs" in row.asDict() else None
-    return BloomIndex(
-        bits, fps, int(row["bits_log2"]), int(row["num_hashes"]),
-        n_docs=None if nd is None or int(nd) < 0 else int(nd),
-    )
+    art = load_artifact(spark, path, "bloom")
+    bits, fps = art.read("bits", "fps", persist=persist)
+    s = art.state
+    return BloomIndex(bits, fps, s["bits_log2"], s["num_hashes"],
+                      n_docs=s["n_docs"])

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import as_list, resolve_col, resolve_cols
 from ..registry import renderer, spark_transform
+from ._artifact import load_artifact, save_artifact
 from ._hash import md5_int
 
 DEPTH_MIN, DEPTH_MAX = 1, 16
@@ -238,7 +239,8 @@ class CMSIndex:
     cost is the NEW batch's sketch plus a |groups|-row elementwise sum;
     the raw history is never rescanned. Counter addition is exact, so an
     incrementally-maintained index is BIT-IDENTICAL to a full rebuild
-    (pinned in tests). ``release()`` unpersists the frame."""
+    (pinned in tests). ``release()`` unpersists the frame; save/load
+    follow the artifact contract in ``_artifact.py``."""
 
     def __init__(self, sketches: DataFrame, depth: int, width: int,
                  column: str, group_by):
@@ -288,26 +290,19 @@ def update_cms_index(index: CMSIndex, new_rows: DataFrame) -> CMSIndex:
 
 
 def save_cms_index(index: CMSIndex, path: str) -> str:
-    """Persist as parquet (``{path}/sketches`` + one-row params)."""
-    index.sketches.write.mode("overwrite").parquet(f"{path}/sketches")
-    spark = index.sketches.sparkSession
-    spark.createDataFrame(
-        [(index.depth, index.width, index.column, ",".join(index.group_by))],
-        "depth int, width int, column string, group_by string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist a :class:`CMSIndex` (artifact contract: ``_artifact``)."""
+    return save_artifact(
+        path, "cms", {"sketches": index.sketches}, depth=index.depth,
+        width=index.width, column=index.column, group_by=index.group_by,
+    )
 
 
 def load_cms_index(spark, path: str, persist: bool = True) -> CMSIndex:
     """Load a :func:`save_cms_index` artifact."""
-    from ._cache import scoped_persist
-
-    row = spark.read.parquet(f"{path}/params").first()
-    sk = spark.read.parquet(f"{path}/sketches")
-    if persist:
-        sk = scoped_persist(sk)
-    gb = [g for g in row["group_by"].split(",") if g]
-    return CMSIndex(sk, row["depth"], row["width"], row["column"], gb)
+    art = load_artifact(spark, path, "cms")
+    (sk,) = art.read("sketches", persist=persist)
+    s = art.state
+    return CMSIndex(sk, s["depth"], s["width"], s["column"], s["group_by"])
 
 
 def _bucket_spark_sql(value_expr: str, d_expr: str, width) -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
+from ._artifact import check_fingerprint, load_artifact, save_artifact
 from ._cache import (
     cheap_to_recompute,
     release_now,
@@ -1503,17 +1504,7 @@ def dedup_against(
                     "MinHashIndex was built with different "
                     "num_hashes/bands/shingle_size than this call"
                 )
-            if reference is not None and index.n_docs is not None:
-                # integrity check tying the index to the corpus it claims to
-                # cover: a stale index silently under-dedups. Omit reference
-                # entirely (it is unused on the index path) to skip the count.
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"MinHashIndex was built over {index.n_docs} reference "
-                        f"documents but the passed reference has {rc} — "
-                        "rebuild the index or drop the reference argument"
-                    )
+            check_fingerprint(index, reference, "docs")
             sig_b, rep_b, bb, caches_b = index.sig, index.reps, index.bands_long, ()
         else:
             sig_b, _, caches_b = _annotate_groups(
@@ -1900,7 +1891,8 @@ class MinHashIndex:
     (mirrors ``similarity.IVFIndex``): signature+banding is the expensive
     phase and is identical for every batch; reusing it makes per-batch cost
     independent of reference size beyond the (slim, cached) band join.
-    ``release()`` unpersists the cached frames."""
+    ``release()`` unpersists the cached frames; save/load follow the
+    artifact contract in ``_artifact.py``."""
 
     def __init__(self, sig, reps, bands_long, num_hashes, bands, shingle_size,
                  caches, n_docs=None):
@@ -1912,7 +1904,7 @@ class MinHashIndex:
         self.shingle_size = shingle_size
         # corpus fingerprint: row count of the reference at build time; used
         # by dedup_against to reject an index that no longer matches the
-        # reference it is presented with (None on pre-fingerprint artifacts)
+        # reference it is presented with
         self.n_docs = n_docs
         self._caches = caches
 
@@ -2025,38 +2017,26 @@ def update_minhash_index(
 
 
 def save_minhash_index(index: MinHashIndex, path: str) -> str:
-    """Persist a :class:`MinHashIndex` as parquet (``{path}/sig``,
-    ``{path}/bands``) plus a one-row params table — rebuild the reference
-    side on the corpus-refresh cadence, load per crawl batch (the same
-    cross-job contract as ``bloom.save_bloom_index``)."""
-    index.sig.write.mode("overwrite").parquet(f"{path}/sig")
-    index.bands_long.write.mode("overwrite").parquet(f"{path}/bands")
-    spark = index.sig.sparkSession
-    spark.createDataFrame(
-        [(index.num_hashes, index.bands, index.shingle_size,
-          -1 if index.n_docs is None else int(index.n_docs))],
-        "num_hashes int, bands int, shingle_size int, n_docs long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist a :class:`MinHashIndex` (artifact contract: ``_artifact``)."""
+    return save_artifact(
+        path, "minhash", {"sig": index.sig, "bands": index.bands_long},
+        num_hashes=index.num_hashes, bands=index.bands,
+        shingle_size=index.shingle_size, n_docs=index.n_docs,
+    )
 
 
 def load_minhash_index(spark, path: str, persist: bool = True) -> MinHashIndex:
     """Load a :func:`save_minhash_index` artifact; ``persist`` pins the
     frames for multi-batch reuse (``release()`` when done)."""
-    row = spark.read.parquet(f"{path}/params").first()
-    sig = spark.read.parquet(f"{path}/sig")
-    bands_long = spark.read.parquet(f"{path}/bands")
-    if persist:
-        sig = scoped_persist(sig)
-        bands_long = scoped_persist(bands_long)
-    reps = sig.filter(F.col("__id") == F.col("__rep"))
-    nd = row["n_docs"] if "n_docs" in row.asDict() else None
+    art = load_artifact(spark, path, "minhash")
+    sig, bands_long = art.read("sig", "bands", persist=persist)
+    s = art.state
     return MinHashIndex(
-        sig, reps, bands_long,
-        int(row["num_hashes"]), int(row["bands"]), int(row["shingle_size"]),
-        (sig, bands_long) if persist else (),
-        n_docs=None if nd is None or int(nd) < 0 else int(nd),
+        sig, sig.filter(F.col("__id") == F.col("__rep")), bands_long,
+        s["num_hashes"], s["bands"], s["shingle_size"],
+        (sig, bands_long) if persist else (), n_docs=s["n_docs"],
     )
+
 
 NDC_RENDER_MAX_ITER = 24
 
@@ -2630,7 +2610,8 @@ class SubstringIndex:
     content→member-id table pairs-mode expansion reads. Content keying
     makes :func:`update_substring_index` EXACTLY rebuild-equivalent (no
     fitted state, no representative relabeling — the binary-index
-    property, unlike the IVF/PQ updates)."""
+    property, unlike the IVF/PQ updates). Save/load follow the artifact
+    contract in ``_artifact.py``."""
 
     def __init__(self, inv, fpck, members, min_tokens, max_doc_freq,
                  caches, n_docs=None, max_positions=None):
@@ -2762,9 +2743,10 @@ def update_substring_index(
 
 
 def _substring_bucket_table(path: str) -> str:
-    """Deterministic catalog name for a bucketed postings table at
-    ``path`` — re-registerable from any session (in-memory catalog
-    metadata does not survive the session; the files and the params row
+    """Deterministic catalog name for the bucketed postings table at
+    ``path`` (a versioned artifact directory, so the name follows the
+    version) — re-registerable from any session (in-memory catalog
+    metadata does not survive the session; the files and the manifest
     do)."""
     import hashlib
 
@@ -2773,9 +2755,7 @@ def _substring_bucket_table(path: str) -> str:
 
 def save_substring_index(index: SubstringIndex, path: str,
                          bucket_by_fp: int | None = None) -> str:
-    """Persist as parquet (``{path}/inv``, ``{path}/fpck``,
-    ``{path}/members``) plus a one-row params table — the
-    save_minhash_index cross-job contract.
+    """Persist a :class:`SubstringIndex` (artifact contract: ``_artifact``).
 
     ``bucket_by_fp`` (round 13): write the postings as a Spark BUCKETED
     external table clustered by ``__fp`` into that many buckets. A
@@ -2785,88 +2765,58 @@ def save_substring_index(index: SubstringIndex, path: str,
     (test_plans.test_substring_index_bucketed_join_no_index_exchange).
     Pick buckets ~ corpus postings / target partition size; the batch
     side is exchanged into the same bucket count per screen."""
-    spark = index.inv.sparkSession
+    writers = None
     if bucket_by_fp is not None:
         if bucket_by_fp < 1:
             raise ParameterException("bucket_by_fp must be >= 1 (or None)")
-        tbl = _substring_bucket_table(path)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            index.inv.write.mode("overwrite").format("parquet")
-            .bucketBy(int(bucket_by_fp), "__fp").sortBy("__fp")
-            .option("path", f"{path}/inv")
-            .saveAsTable(tbl)
-        )
-    else:
-        index.inv.write.mode("overwrite").parquet(f"{path}/inv")
-    index.fpck.write.mode("overwrite").parquet(f"{path}/fpck")
-    index.members.write.mode("overwrite").parquet(f"{path}/members")
-    spark.createDataFrame(
-        [(index.min_tokens,
-          -1 if index.max_doc_freq is None else int(index.max_doc_freq),
-          -1 if index.n_docs is None else int(index.n_docs),
-          -1 if index.max_positions is None else int(index.max_positions),
-          -1 if bucket_by_fp is None else int(bucket_by_fp))],
-        "min_tokens int, max_doc_freq long, n_docs long, "
-        "max_positions long, bucket_by_fp long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+
+        def write_bucketed(df: DataFrame, inv_path: str) -> None:
+            (
+                df.write.format("parquet")
+                .bucketBy(int(bucket_by_fp), "__fp").sortBy("__fp")
+                .option("path", inv_path)
+                .saveAsTable(_substring_bucket_table(inv_path))
+            )
+
+        writers = {"inv": write_bucketed}
+    return save_artifact(
+        path, "substring",
+        {"inv": index.inv, "fpck": index.fpck, "members": index.members},
+        writers=writers, min_tokens=index.min_tokens,
+        max_doc_freq=index.max_doc_freq, max_positions=index.max_positions,
+        n_docs=index.n_docs, bucket_by_fp=bucket_by_fp,
+    )
 
 
 def load_substring_index(spark, path: str, persist: bool = True) -> SubstringIndex:
     """Load a :func:`save_substring_index` artifact; ``persist`` pins the
     frames for multi-batch reuse (``release()`` when done). A
-    ``bucket_by_fp`` artifact re-registers its postings as the bucketed
-    catalog table (idempotent), so every batch screen reuses the
-    shuffle-free index side; bucketed postings are NOT persist-pinned —
-    caching would hide the scan's bucket spec behind an InMemoryRelation
-    and parquet re-reads are what the bucketing amortizes anyway."""
-    row = spark.read.parquet(f"{path}/params").first()
-    rd0 = row.asDict()
-    nb = int(rd0.get("bucket_by_fp", -1))
-    if nb > 0:
-        tbl = _substring_bucket_table(path)
-        if spark.catalog.tableExists(tbl):
-            # the artifact may have been re-saved with a different bucket
-            # count since this session registered the table — stale bucket
-            # metadata would silently mis-prune, so verify and re-register
-            desc = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
-            cur = next((r["data_type"] for r in desc
-                        if r["col_name"] == "Num Buckets"), None)
-            if cur is None or int(cur) != nb:
-                spark.sql(f"DROP TABLE {tbl}")
-            else:
-                # same bucket count but possibly re-saved files at the
-                # same path — drop the stale cached file listing
-                spark.catalog.refreshTable(tbl)
+    ``bucket_by_fp`` artifact registers its postings as the bucketed
+    catalog table of its version (once per session), so every batch
+    screen reuses the shuffle-free index side; bucketed postings are NOT
+    persist-pinned — caching would hide the scan's bucket spec behind an
+    InMemoryRelation and parquet re-reads are what the bucketing
+    amortizes anyway."""
+    art = load_artifact(spark, path, "substring")
+    s = art.state
+    fpck, members = art.read("fpck", "members", persist=persist)
+    caches = (fpck, members) if persist else ()
+    nb = s["bucket_by_fp"]
+    if nb:
+        tbl = _substring_bucket_table(art.path("inv"))
         if not spark.catalog.tableExists(tbl):
             spark.sql(
                 f"CREATE TABLE {tbl} (__ck STRING, __pos BIGINT, "
                 f"__fp STRING) USING PARQUET CLUSTERED BY (__fp) "
-                f"INTO {nb} BUCKETS LOCATION '{path}/inv'"
+                f"INTO {nb} BUCKETS LOCATION '{art.path('inv')}'"
             )
         inv = spark.table(tbl)
     else:
-        inv = spark.read.parquet(f"{path}/inv")
-    fpck = spark.read.parquet(f"{path}/fpck")
-    members = spark.read.parquet(f"{path}/members")
-    caches = ()
-    if persist:
-        fpck, members = scoped_persist(fpck), scoped_persist(members)
-        caches = (fpck, members)
-        if nb <= 0:
-            inv = scoped_persist(inv)
-            caches = (inv, fpck, members)
-    mdf = int(row["max_doc_freq"])
-    nd = int(row["n_docs"])
-    # pre-round-13 artifacts carry no max_positions column => uncapped
-    rd = row.asDict()
-    mp = int(rd.get("max_positions", -1))
+        (inv,) = art.read("inv", persist=persist)
+        caches = (inv,) + caches
     return SubstringIndex(
-        inv, fpck, members, int(row["min_tokens"]),
-        None if mdf < 0 else mdf, caches,
-        n_docs=None if nd < 0 else nd,
-        max_positions=None if mp < 0 else mp,
+        inv, fpck, members, s["min_tokens"], s["max_doc_freq"], caches,
+        n_docs=s["n_docs"], max_positions=s["max_positions"],
     )
 
 
@@ -2949,14 +2899,7 @@ def dedup_against_substring(
                     f"max_positions={index.max_positions}, call requested "
                     f"{req_mp} — pass the matching value or omit it"
                 )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"SubstringIndex was built over {index.n_docs} reference "
-                    f"docs but the passed reference has {rc} — rebuild or "
-                    "update_substring_index first"
-                )
+        check_fingerprint(index, reference, "docs")
         idx, built = index, None
     else:
         idx = built = substring_index(

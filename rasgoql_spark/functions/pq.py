@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer as _renderer, spark_transform
+from ._artifact import check_fingerprint, load_artifact, save_artifact
 from ._cache import release_with, scoped_persist
 from ._litfast import centroid_array_lit, double_array_lit, double_matrix_lit
 from .cluster import CENT_ROUND, _assign_expr, _fit_kmeans, _unit_rounded
@@ -502,9 +503,9 @@ class IVFPQIndex:
     ONCE with :func:`ivfpq_index` and pass to any number of
     ``similarity_search_ivfpq`` calls — the amortized production shape
     (index build is the expensive phase: two deterministic fits; per-query
-    search is a bounded probe + a codes-only candidate scan). Same
-    lifecycle contract as :class:`~.similarity.IVFIndex`: ``release()``
-    unpersists; ``n_docs`` is the row-count staleness fingerprint.
+    search is a bounded probe + a codes-only candidate scan).
+    ``release()`` unpersists; save/load follow the artifact contract in
+    ``_artifact.py``; ``n_docs`` is the row-count staleness fingerprint.
     The fingerprint is CALLER-CHECKED on the search path:
     ``similarity_search_ivfpq(index=...)`` searches whatever frame the
     index holds without comparing ``n_docs`` to the passed ``df`` (the
@@ -734,69 +735,36 @@ def ivfpq_index(
 
 
 def save_ivfpq_index(index: IVFPQIndex, path: str) -> str:
-    """Persist an :class:`IVFPQIndex` as parquet (``{path}/frame``,
-    ``{path}/centroids``, ``{path}/books``, ``{path}/params``) — the
-    cross-job artifact form (same contract as save_ivf_index)."""
-    index.frame.select("__id", "__u", "__cid", "__codes").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/frame")
-    spark = index.frame.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in index.centroids],
-        "c bigint, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (int(s), int(c), [float(x) for x in v])
-            for s in range(index.m)
-            for c, v in index.books[s]
-        ],
-        "s int, c int, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/books")
-    spark.createDataFrame(
-        [(
-            int(index.m), int(index.d_sub), int(index.round_to),
-            -1 if index.n_docs is None else int(index.n_docs),
-            bool(index.residual),
-            # the rotation matrix regenerates from its spec; only the
-            # spec persists (rotated=False -> seed/sweeps ignored)
-            index.rotation is not None,
-            int(index.rotation_seed), int(index.rotation_sweeps),
-        )],
-        "m int, d_sub int, round_to int, n_docs long, residual boolean, "
-        "rotated boolean, rotation_seed int, rotation_sweeps int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist an :class:`IVFPQIndex` (artifact contract: ``_artifact``);
+    centroids and codebooks ride in the manifest, and the rotation
+    persists as its spec (the matrix regenerates from it)."""
+    return save_artifact(
+        path, "ivfpq",
+        {"frame": index.frame.select("__id", "__u", "__cid", "__codes")},
+        centroids=index.centroids, books=index.books, m=index.m,
+        d_sub=index.d_sub, round_to=index.round_to, n_docs=index.n_docs,
+        residual=index.residual, rotated=index.rotation is not None,
+        rotation_seed=index.rotation_seed,
+        rotation_sweeps=index.rotation_sweeps,
+    )
 
 
 def load_ivfpq_index(spark, path: str, persist: bool = True) -> IVFPQIndex:
-    """Load a :func:`save_ivfpq_index` artifact; centroid/codebook collects
-    are bounded (k·dim + m·codebook_size·d_sub doubles), same as at build."""
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    cents = [
-        (int(r["c"]), list(r["v"]))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("c").collect()
-    ]
-    prm = spark.read.parquet(f"{path}/params").first()
-    brows = spark.read.parquet(f"{path}/books").orderBy("s", "c").collect()
-    books = [[] for _ in range(int(prm["m"]))]
-    for r in brows:
-        books[int(r["s"])].append((int(r["c"]), list(r["v"])))
-    nd = int(prm["n_docs"])
-    rot, rseed, rsweeps = None, 0, 4
-    if "rotated" in prm.__fields__ and bool(prm["rotated"]):
-        rseed = int(prm["rotation_seed"])
-        rsweeps = int(prm["rotation_sweeps"])
-        rot = rotation_matrix(
-            rseed, int(prm["m"]) * int(prm["d_sub"]), rsweeps
-        )
+    """Load a :func:`save_ivfpq_index` artifact; ``persist`` pins the frame
+    for multi-search reuse (``release()`` when done)."""
+    art = load_artifact(spark, path, "ivfpq")
+    (frame,) = art.read("frame", persist=persist)
+    s = art.state
+    rot = None
+    if s["rotated"]:
+        rot = rotation_matrix(s["rotation_seed"], s["m"] * s["d_sub"],
+                              s["rotation_sweeps"])
     return IVFPQIndex(
-        frame, cents, books, int(prm["m"]), int(prm["d_sub"]),
-        int(prm["round_to"]), n_docs=None if nd < 0 else nd,
-        residual=("residual" in prm.__fields__ and bool(prm["residual"])),
-        rotation=rot, rotation_seed=rseed, rotation_sweeps=rsweeps,
+        frame, [(int(c), v) for c, v in s["centroids"]],
+        [[(int(c), v) for c, v in book] for book in s["books"]],
+        s["m"], s["d_sub"], s["round_to"], n_docs=s["n_docs"],
+        residual=s["residual"], rotation=rot,
+        rotation_seed=s["rotation_seed"], rotation_sweeps=s["rotation_sweeps"],
     )
 
 
@@ -1482,14 +1450,7 @@ def embedding_join_ivfpq(
                 "ivfpq_index / load_ivfpq_index); got "
                 f"{type(index).__name__}"
             )
-        if odf is not None and index.n_docs is not None:
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFPQIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_ivfpq_index or rebuild"
-                )
+        check_fingerprint(index, odf, "vectors", side="right-side")
         idx, own = index, False
     else:
         if odf is None:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
+from ._artifact import check_fingerprint, load_artifact, save_artifact
 from ._cache import release_now, release_with, scoped_persist
 from ._litfast import centroid_array_lit
 from .dedup import _cosine_sql, _hyperplane_sign, _sql_id_literal, cosine_expr
@@ -325,12 +326,10 @@ class IVFIndex:
     any number of ``similarity_search_ivf`` calls — the production shape:
     index build is the expensive phase (seed collect + Lloyd pass);
     per-query search is a broadcast probe join over the cached frame.
-    ``release()`` unpersists the frame. ``n_docs`` is the corpus-size
-    fingerprint (rows indexed at build/update time — the same staleness
-    contract as MinHashIndex/BloomIndex). The fingerprint is a ROW COUNT
-    only: a same-size corpus with different content passes undetected
-    (documented trade — a content hash would cost a full scan per check),
-    and checking it triggers one count() on the passed frame."""
+    ``release()`` unpersists the frame; save/load follow the artifact
+    contract in ``_artifact.py``. ``n_docs`` is the corpus-size
+    fingerprint (rows indexed at build/update time; see
+    ``_artifact.check_fingerprint``)."""
 
     def __init__(self, frame: DataFrame, centroids: list, n_docs: int | None = None):
         self.frame = frame
@@ -362,38 +361,21 @@ def ivf_index(
 
 
 def save_ivf_index(index: IVFIndex, path: str) -> str:
-    """Persist an :class:`IVFIndex` as parquet (``{path}/frame`` = the
-    assigned normalized corpus, ``{path}/centroids``, ``{path}/params``) —
-    the cross-job form of the index: build on the corpus-refresh cadence,
-    load per query batch (same artifact contract as save_minhash_index /
-    save_bloom_index)."""
-    index.frame.select("__id", "__nvec", "CENTROID_ID").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/frame")
-    spark = index.frame.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in index.centroids],
-        "c bigint, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(-1 if index.n_docs is None else int(index.n_docs),)], "n_docs long"
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist an :class:`IVFIndex` (artifact contract: ``_artifact``); the
+    centroid list rides in the manifest."""
+    return save_artifact(
+        path, "ivf", {"frame": index.frame.select("__id", "__nvec", "CENTROID_ID")},
+        centroids=index.centroids, n_docs=index.n_docs,
+    )
 
 
 def load_ivf_index(spark, path: str, persist: bool = True) -> IVFIndex:
     """Load a :func:`save_ivf_index` artifact. ``persist`` pins the frame
-    for multi-search reuse (call ``release()`` when done). The centroid
-    list is a bounded driver collect (k·dim doubles), same as at build."""
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    cents = [
-        (int(r["c"]), list(r["v"]))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("c").collect()
-    ]
-    nd = int(spark.read.parquet(f"{path}/params").first()["n_docs"])
-    return IVFIndex(frame, cents, n_docs=None if nd < 0 else nd)
+    for multi-search reuse (call ``release()`` when done)."""
+    art = load_artifact(spark, path, "ivf")
+    (frame,) = art.read("frame", persist=persist)
+    cents = [(int(c), v) for c, v in art.state["centroids"]]
+    return IVFIndex(frame, cents, n_docs=art.state["n_docs"])
 
 
 def update_ivf_index(
@@ -516,17 +498,7 @@ def embedding_join_ivf(
             num_centroids, nprobe, right_prefix, round_scores,
         )
     if index is not None:
-        if odf is not None and index.n_docs is not None:
-            # staleness fingerprint — same contract as every other index
-            # path: a prebuilt index that no longer matches the right-side
-            # frame it claims to cover would silently miss new vectors
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_ivf_index or rebuild"
-                )
+        check_fingerprint(index, odf, "vectors", side="right-side")
         idx, cents, cached = index.frame, index.centroids, None
     else:
         if odf is None:
@@ -841,15 +813,7 @@ def dedup_against_embedding(
                     "binary_index / load_binary_index); got "
                     f"{type(index).__name__}"
                 )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"BinaryIndex was built over {index.n_docs} "
-                        f"reference vectors but the passed reference has "
-                        f"{rc} — fold the new vectors in with "
-                        "update_binary_index or rebuild"
-                    )
+            check_fingerprint(index, reference, "vectors")
             n_words = index.n_words
             if bdim is not None and index.dim is not None and int(bdim["d"]) != index.dim:
                 raise ParameterException(
@@ -925,14 +889,7 @@ def dedup_against_embedding(
                     "ivfpq_index / load_ivfpq_index); got "
                     f"{type(index).__name__}"
                 )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"IVFPQIndex was built over {index.n_docs} reference "
-                        f"vectors but the passed reference has {rc} — fold "
-                        "the new vectors in with update_ivfpq_index or rebuild"
-                    )
+            check_fingerprint(index, reference, "vectors")
             pidx, cached = index, None
         else:
             rv = resolve_col(reference, ref_vec or vec_col)
@@ -1003,14 +960,7 @@ def dedup_against_embedding(
                     "method='ivf' takes an IVFIndex (build with ivf_index "
                     f"/ load_ivf_index); got {type(index).__name__}"
                 )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"IVFIndex was built over {index.n_docs} reference "
-                        f"vectors but the passed reference has {rc} — fold "
-                        "the new vectors in with update_ivf_index or rebuild"
-                    )
+            check_fingerprint(index, reference, "vectors")
             idx, cents, cached = index.frame, index.centroids, None
         else:
             rv = resolve_col(reference, ref_vec or vec_col)
@@ -1582,10 +1532,9 @@ class BinaryIndex:
     to any number of ``dedup_against_embedding(method='binary')`` calls —
     without it each batch re-scans and re-packs the full-width reference
     vectors (512 B/row at 64-dim float64); with it the per-batch
-    reference read is the 8-byte signatures only. Same lifecycle contract
-    as MinHashIndex/BloomIndex/IVFIndex/IVFPQIndex: ``release()``
-    unpersists, ``n_docs`` is the row-count staleness fingerprint,
-    save/load/update complete the crawl-ingest loop. ``dim`` records the
+    reference read is the 8-byte signatures only. ``release()``
+    unpersists, ``n_docs`` is the row-count staleness fingerprint;
+    save/load follow the artifact contract in ``_artifact.py``. ``dim`` records the
     EXACT build-time vector dimension — word count alone is too coarse a
     geometry guard (a 48-dim batch also packs to 2 words but its top 16
     sign bits are zero-padding, silently inflating every Hamming
@@ -1632,32 +1581,18 @@ def binary_index(reference: DataFrame, vec_col: str, id_col: str) -> BinaryIndex
 
 
 def save_binary_index(index: BinaryIndex, path: str) -> str:
-    """Persist a :class:`BinaryIndex` as parquet (``{path}/frame``,
-    ``{path}/params``) — the cross-job artifact form."""
-    index.frame.select("__rid", "__sig").write.mode("overwrite").parquet(
-        f"{path}/frame"
+    """Persist a :class:`BinaryIndex` (artifact contract: ``_artifact``)."""
+    return save_artifact(
+        path, "binary", {"frame": index.frame.select("__rid", "__sig")},
+        n_words=index.n_words, n_docs=index.n_docs, dim=index.dim,
     )
-    index.frame.sparkSession.createDataFrame(
-        [(
-            int(index.n_words),
-            -1 if index.n_docs is None else int(index.n_docs),
-            -1 if index.dim is None else int(index.dim),
-        )],
-        "n_words int, n_docs long, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
 
 
 def load_binary_index(spark, path: str, persist: bool = True) -> BinaryIndex:
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    prm = spark.read.parquet(f"{path}/params").first()
-    nd = int(prm["n_docs"])
-    dm = int(prm["dim"]) if "dim" in prm.__fields__ else -1
-    return BinaryIndex(frame, int(prm["n_words"]),
-                       n_docs=None if nd < 0 else nd,
-                       dim=None if dm < 0 else dm)
+    art = load_artifact(spark, path, "binary")
+    (frame,) = art.read("frame", persist=persist)
+    s = art.state
+    return BinaryIndex(frame, s["n_words"], n_docs=s["n_docs"], dim=s["dim"])
 
 
 def update_binary_index(index: BinaryIndex, new_vecs: DataFrame,
@@ -2023,14 +1958,7 @@ def embedding_join_binary(
                 "rerank=True needs the right-side vectors (other=...); a "
                 "BinaryIndex holds signatures only"
             )
-        if odf is not None and index.n_docs is not None:
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BinaryIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_binary_index or rebuild"
-                )
+        check_fingerprint(index, odf, "vectors", side="right-side")
         if index.dim is not None and int(first["d"]) != index.dim:
             raise ParameterException(
                 f"left vectors have dim {int(first['d'])} but the index "

@@ -35,6 +35,7 @@ from ..errors import ParameterException
 from ..naming import cleanse_name
 from ..operators._util import as_list, resolve_col, resolve_cols
 from ..registry import spark_transform
+from ._artifact import load_artifact, save_artifact
 
 LG_K_MIN, LG_K_MAX = 4, 21  # DataSketches HLL bounds
 
@@ -151,7 +152,8 @@ class HLLIndex:
     update cost is the NEW batch's aggregate plus a |groups|-row union;
     the raw history is never rescanned. Sketch union is a register-max,
     so an incrementally-maintained index is BIT-IDENTICAL in estimate to a
-    full rebuild (pinned in tests). ``release()`` unpersists the frame."""
+    full rebuild (pinned in tests). ``release()`` unpersists the frame;
+    save/load follow the artifact contract in ``_artifact.py``."""
 
     def __init__(self, sketches: DataFrame, lg_k: int, column: str, group_by):
         self.sketches = sketches
@@ -202,23 +204,16 @@ def update_hll_index(index: HLLIndex, new_rows: DataFrame) -> HLLIndex:
 
 
 def save_hll_index(index: HLLIndex, path: str) -> str:
-    """Persist as parquet (``{path}/sketches`` + one-row params)."""
-    index.sketches.write.mode("overwrite").parquet(f"{path}/sketches")
-    spark = index.sketches.sparkSession
-    spark.createDataFrame(
-        [(index.lg_k, index.column, ",".join(index.group_by))],
-        "lg_k int, column string, group_by string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    """Persist a :class:`HLLIndex` (artifact contract: ``_artifact``)."""
+    return save_artifact(
+        path, "hll", {"sketches": index.sketches}, lg_k=index.lg_k,
+        column=index.column, group_by=index.group_by,
+    )
 
 
 def load_hll_index(spark, path: str, persist: bool = True) -> HLLIndex:
     """Load a :func:`save_hll_index` artifact."""
-    from ._cache import scoped_persist
-
-    row = spark.read.parquet(f"{path}/params").first()
-    sk = spark.read.parquet(f"{path}/sketches")
-    if persist:
-        sk = scoped_persist(sk)
-    gb = [g for g in row["group_by"].split(",") if g]
-    return HLLIndex(sk, row["lg_k"], row["column"], gb)
+    art = load_artifact(spark, path, "hll")
+    (sk,) = art.read("sketches", persist=persist)
+    s = art.state
+    return HLLIndex(sk, s["lg_k"], s["column"], s["group_by"])

@@ -9,6 +9,7 @@ same plan runs incrementally with watermark-bounded state.
 
 from __future__ import annotations
 
+from ..functions._artifact import check_fingerprint
 from ..functions._cache import release_now, scoped_persist
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -537,14 +538,7 @@ def stream_dedup_against(
                 f"min_tokens={index.min_tokens}, call requested "
                 f"{min_tokens} — pass the matching value or rebuild"
             )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"SubstringIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_substring_index or rebuild"
-                )
+        check_fingerprint(index, reference, "docs")
         _sub_idx = index
 
         def clean(b: DataFrame) -> DataFrame:
@@ -561,14 +555,7 @@ def stream_dedup_against(
             raise ParameterException(
                 f"method={method!r} conflicts with a BinaryIndex"
             )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BinaryIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_binary_index or rebuild"
-                )
+        check_fingerprint(index, reference, "vectors")
 
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
@@ -585,14 +572,7 @@ def stream_dedup_against(
             raise ParameterException(
                 f"method={method!r} conflicts with an IVFPQIndex"
             )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFPQIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_ivfpq_index or rebuild"
-                )
+        check_fingerprint(index, reference, "vectors")
 
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
@@ -605,14 +585,7 @@ def stream_dedup_against(
                 f"method={method!r} conflicts with an IVFIndex"
             )
         # one-time staleness guard, same contract as the other index paths
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_ivf_index or rebuild"
-                )
+        check_fingerprint(index, reference, "vectors")
 
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
@@ -627,14 +600,7 @@ def stream_dedup_against(
         # staleness guard, ONCE before the stream starts (never per batch):
         # the index is the authority on the index path, so a reference that
         # doesn't match its build-time row count means a stale artifact
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BloomIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_bloom_index or rebuild"
-                )
+        check_fingerprint(index, reference, "docs")
 
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_bloom(
@@ -650,14 +616,7 @@ def stream_dedup_against(
         # same one-time integrity check the batch path runs — lifted out of
         # the per-batch closure so the reference is never re-counted (or
         # forwarded at all) in the hot streaming loop
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"MinHashIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_minhash_index or rebuild"
-                )
+        check_fingerprint(index, reference, "docs")
 
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against(
